@@ -1006,14 +1006,16 @@ object Dedup {
     * keys INTO the join — |truth|·8 rows through a 3-column band-key
     * shuffle plus a pair `distinct()` to undo the multi-key fanout
     * (~53 M intermediate rows at sf10 for 6.6 M truth pairs).
+    * Returns the caught relation and the pinned packed relation, which
+    * the caller releases once the caught relation is materialized.
     */
   private def caughtBy(truth: DataFrame, keys: DataFrame,
-                       keyCols: Seq[String], method: String): DataFrame = {
+                       keyCols: Seq[String], method: String): (DataFrame, DataFrame) = {
     import truth.sparkSession.implicits._
     val packed = keys.groupBy($"doc_id")
       .agg(collect_list(struct(keyCols.map(col): _*)).as("ks"))
       .persist()
-    truth
+    val caught = truth
       .join(packed.select($"doc_id".as("doc_id_1"), $"ks".as("k1")),
         Seq("doc_id_1"))
       .join(packed.select($"doc_id".as("doc_id_2"), $"ks".as("k2")),
@@ -1021,15 +1023,18 @@ object Dedup {
       .filter(arrays_overlap($"k1", $"k2"))
       .select($"doc_id_1", $"doc_id_2")
       .withColumn("method", lit(method))
+    (caught, packed)
   }
 
   /** The pinned truth relation plus the two PRE-CHECKPOINT catch
     * branches — [[dedupRecallEval]]'s building blocks, split out as
-    * the plan-audit surface. The caller must materialize `truth`
-    * (count) before consuming the branches concurrently.
+    * the plan-audit surface — and the branches' own pinned relations,
+    * which the caller releases once it is done with the branches. The
+    * caller must materialize `truth` (count) before consuming the
+    * branches concurrently.
     */
   private[graft] def recallBranches(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
     import spark.implicits._
     val sample = recallAuditSample(spark, sfDir)
     val truth = ngramPairs(sample, 7000)
@@ -1049,26 +1054,28 @@ object Dedup {
     val truthDocs = truth.select($"doc_id_1".as("doc_id"))
       .union(truth.select($"doc_id_2".as("doc_id")))
     val audited = sample.join(truthDocs, Seq("doc_id"), "left_semi")
-    val mhCaught = caughtBy(truth, minhashBands(audited),
+    val (mhCaught, mhPacked) = caughtBy(truth, minhashBands(audited),
       Seq("band_idx", "band_hash"), "minhash_lsh")
-    val shCaught = caughtBy(truth, simhashChunks(audited),
+    val (shCaught, shPacked) = caughtBy(truth, simhashChunks(audited),
       Seq("chunk_idx", "chunk_val"), "simhash_chunk")
-    (truth, mhCaught, shCaught)
+    (truth, mhCaught, shCaught, Seq(mhPacked, shPacked))
   }
 
   def dedupRecallEval(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val (truth, mhCaught, shCaught) = recallBranches(spark, sfDir)
-    // materialize before the concurrent method branches below — a
-    // cold persisted relation first touched by two concurrent jobs
-    // can be computed redundantly by each
-    truth.count()
+    val (truth, mhCaught, shCaught, packed) = recallBranches(spark, sfDir)
     // the two catch branches are independent passes over the pinned
     // truth — overlap them (guide §2.6), each materializing via its
     // own localCheckpoint; rows identical, only job overlap changes
-    val caught = graft.core.Overlap.run(spark, "dedupRecallEval", 2)(Seq(
-      () => mhCaught.localCheckpoint(),
-      () => shCaught.localCheckpoint())).reduce(_ union _)
+    val caught = try {
+      // materialize before the concurrent method branches below — a
+      // cold persisted relation first touched by two concurrent jobs
+      // can be computed redundantly by each
+      truth.count()
+      graft.core.Overlap.run(spark, "dedupRecallEval", 2)(Seq(
+        () => mhCaught.localCheckpoint(),
+        () => shCaught.localCheckpoint())).reduce(_ union _)
+    } finally packed.foreach(_.unpersist())
     // ≤3-row threshold axis and ≤6-row aggregates: broadcast the
     // axes, roll the (method, threshold) matrix up from the pinned
     // truth relation — every corpus-sized stage is above this line

@@ -726,11 +726,13 @@ object Relational {
     // SHUFFLED-HASH on the fact-fact join (guide §3, r19): the F-
     // filtered orders side is ~12% of lineitem — too big to broadcast
     // at any real scale, but its per-partition slice builds a hash map
-    // comfortably (and SHJ spills per partition if it ever doesn't) —
-    // and the hash build skips BOTH sides' sorts, the SMJ's dominant
-    // cost here (sf10 same-JVM A/B, warm passes: SMJ 5.19/4.72 s vs
-    // SHJ 3.91/3.67 s on the join+aggregate prefix). The aggregates
-    // downstream are hash aggregates — nothing needed that sort order.
+    // comfortably (the SHJ build side is an in-memory hash relation
+    // that does not generally spill, so this rests on the slice
+    // staying small) — and the hash build skips BOTH sides' sorts, the
+    // SMJ's dominant cost here (sf10 same-JVM A/B, warm passes: SMJ
+    // 5.19/4.72 s vs SHJ 3.91/3.67 s on the join+aggregate prefix).
+    // The aggregates downstream are hash aggregates — nothing needed
+    // that sort order.
     // SCALE-ADAPTIVE (a SHUFFLE_HASH hint outranks broadcast in join
     // selection, so an unconditional hint would also kill the
     // broadcast plan that wins at small SFs): hint only when the

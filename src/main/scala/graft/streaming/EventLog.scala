@@ -11,11 +11,14 @@ import org.apache.spark.sql.functions._
   * from committed offsets, and replay-from-earliest
   * (`auto.offset.reset=smallest`).
   *
-  * Scale notes: production is one narrow pass + a per-partition
-  * window for offset assignment; the only driver-side read is the
-  * ≤ numPartitions-row high-water-mark aggregate (metadata, not
-  * data). Consumption is a partition-pruned scan with the offset
-  * predicate pushed to parquet.
+  * Scale notes: every topic read supplies the known [[schema]], so
+  * none pays a schema-inference job. Production is the
+  * ≤ numPartitions-row high-water-mark aggregate (metadata, not data)
+  * and then one narrow pass + a per-partition window for offset
+  * assignment, the marks entering as a literal column. Consumption is
+  * a partition-pruned scan with the offset predicate pushed to
+  * parquet; a bounded poll adds one sizing query over the uncommitted
+  * tail.
   */
 final class EventLog(val dir: String, val numPartitions: Int = 8,
                      val compression: String = "snappy") {
@@ -30,17 +33,15 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     * storage codec).
     */
   def produce(records: DataFrame): Unit = {
-    val spark = records.sparkSession
-    val hwm = highWaterMarks(spark)
-    val hwmDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        (0 until numPartitions).map(p =>
-          org.apache.spark.sql.Row(p, hwm.getOrElse(p, -1L)))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("partition",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("hwm",
-          org.apache.spark.sql.types.LongType))))
+    // each partition's high-water mark as a literal CASE column
+    // (-1 = empty partition)
+    val hwm = highWaterMarks(records.sparkSession).toSeq.sorted match {
+      case Seq() => lit(-1L)
+      case (p0, h0) +: rest =>
+        rest.foldLeft(when(col("partition") === p0, h0)) {
+          case (c, (p, h)) => c.when(col("partition") === p, h)
+        }.otherwise(-1L)
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("partition").orderBy("key")
     records
@@ -50,9 +51,7 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
       // into a partition=null directory
       .withColumn("partition",
         pmod(xxhash64(coalesce(col("key"), lit(""))), lit(numPartitions)).cast("int"))
-      .join(broadcast(hwmDf), Seq("partition"))
-      .withColumn("offset",
-        col("hwm") + row_number().over(w).cast("long"))
+      .withColumn("offset", hwm + row_number().over(w).cast("long"))
       .withColumn("produced_at", current_timestamp())
       .select("partition", "offset", "key", "payload", "produced_at")
       .write.mode("append").option("compression", compression)
@@ -85,7 +84,7 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
   def highWaterMarks(spark: SparkSession): Map[Int, Long] = {
     restoreAfterCrashedSwap()
     if (!new java.io.File(dir).exists()) Map.empty
-    else spark.read.parquet(dir)
+    else spark.read.schema(schema).parquet(dir)
       .groupBy("partition").agg(max("offset").as("hwm"))
       .collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -115,7 +114,7 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     val base =
       if (!new java.io.File(dir).exists())
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.parquet(dir)
+      else spark.read.schema(schema).parquet(dir)
     if (committed.isEmpty) base
     else {
       val pred = committed.foldLeft(lit(true)) { case (acc, (p, off)) =>
@@ -274,6 +273,17 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
       case Some(m) => m
       case None => committed(groupId)
     }
+  }
+
+  /** Consumer lag per partition: the high-water mark minus the
+    * group's committed offset, a partition the group never committed
+    * counting from -1 (`auto.offset.reset=smallest`). Partitions that
+    * hold no message are absent. The position is read before the marks,
+    * so a poll committing in between cannot make a lag negative.
+    */
+  def lag(spark: SparkSession, groupId: String): Map[Int, Long] = {
+    val done = committed(groupId)
+    highWaterMarks(spark).map { case (p, h) => p -> (h - done.getOrElse(p, -1L)) }
   }
 
   /** Compact a group's commit history: fold every commit file into
@@ -875,12 +885,22 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     * commit, hand the batch to `handler` (the reference's
     * `MessageHandler` receiving the polled batch), then commit the
     * new high-water-marks. At-least-once: a crash between handler
-    * and commit replays the batch on the next poll.
+    * and commit replays the batch on the next poll. One cached scan
+    * serves the HWM/count aggregate and the handler.
     */
   def poll(spark: SparkSession, groupId: String)
           (handler: DataFrame => Unit): Long = {
     val base = committed(groupId)
-    runPoll(consume(spark, base), groupId, base, handler)
+    val batch = consume(spark, base).persist()
+    try {
+      val stats = batch.groupBy("partition")
+        .agg(max("offset").as("hwm"), count(lit(1)).as("n"))
+        .collect()
+      val hwms = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val n = stats.map(_.getLong(2)).sum
+      if (n > 0) { handler(batch); commit(groupId, base ++ hwms) }
+      n
+    } finally batch.unpersist()
   }
 
   /** Bounded poll — the reference consumer's backpressure knob
@@ -893,24 +913,33 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     * assumed contiguous offsets and stalled forever when
     * [[compactByKey]] left a gap wider than the allocation (the batch
     * filtered to empty, nothing committed, every retry identical).
-    * The commit is the max offset actually taken ([[runPoll]]), so
-    * positions stay valid across compaction. Repeated polls drain the
-    * backlog in bounded steps — a consumer restarted after downtime
-    * processes the outage in `maxMessages`-sized batches instead of
-    * one unbounded one. Costs two metadata-sized pre-passes over the
-    * pruned uncommitted tail (sizing aggregate, then per-partition
-    * rank for the cutoffs — ≤ P rows collected each); the final batch
-    * predicate is plain `offset <= cutoff` per partition, which
-    * pushes to the parquet scan.
+    * The commit is each partition's cutoff, the max offset actually
+    * taken, so positions stay valid across compaction. Repeated polls
+    * drain the backlog in bounded steps — a consumer restarted after
+    * downtime processes the outage in `maxMessages`-sized batches
+    * instead of one unbounded one. Costs one sizing query over the
+    * pruned uncommitted tail: per partition, the backlog count and
+    * the `maxMessages` smallest offsets (window functions over one
+    * shuffle; ≤ P × `maxMessages` rows collected — no allocation
+    * reaches past that rank). The cutoffs, the commit and the count
+    * follow on the driver, and the batch predicate is plain
+    * `offset <= cutoff` per partition, which pushes to the parquet
+    * scan. Offsets appended after the sizing query lie past every
+    * cutoff, so a concurrent produce cannot change the batch.
     */
   def poll(spark: SparkSession, groupId: String, maxMessages: Long)
           (handler: DataFrame => Unit): Long = {
     require(maxMessages > 0, s"maxMessages must be positive: $maxMessages")
     val base = committed(groupId)
-    val backlog = consume(spark, base)
-      .groupBy("partition").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1))
-      .sortBy(_._1)
+    val tail = consume(spark, base)
+    val byPartition = org.apache.spark.sql.expressions.Window.partitionBy("partition")
+    val ranked = tail
+      .withColumn("_rk", row_number().over(byPartition.orderBy("offset")))
+      .withColumn("_n", count(lit(1)).over(byPartition))
+      .filter(col("_rk") <= maxMessages)
+      .select("partition", "offset", "_n")
+      .collect()
+    val backlog = ranked.map(r => r.getInt(0) -> r.getLong(2)).distinct.sortBy(_._1)
     val total = backlog.map(_._2).sum
     if (total == 0) 0L
     else {
@@ -927,44 +956,19 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
           alloc(p) += 1; left -= 1
         }
       }
-      // cutoff per partition = its alloc(p)-th smallest uncommitted
-      // offset (row_number over the pruned tail; ≤ P rows collected)
-      val wr = org.apache.spark.sql.expressions.Window
-        .partitionBy("partition").orderBy("offset")
-      val rankPred = alloc.filter(_._2 > 0).foldLeft(lit(false)) {
-        case (acc, (p, k)) =>
-          acc || (col("partition") === p && col("_rk") === lit(k))
-      }
-      val cutoffs = consume(spark, base).select("partition", "offset")
-        .withColumn("_rk", row_number().over(wr))
-        .filter(rankPred)
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      // cutoff per partition = its alloc(p)-th smallest uncommitted offset
+      val offsets = ranked.groupBy(_.getInt(0)).map { case (p, rows) =>
+        p -> rows.map(_.getLong(1)).sorted }
+      val cutoffs = alloc.collect { case (p, k) if k > 0 =>
+        p -> offsets(p)(k.toInt - 1) }.toMap
       val pred = cutoffs.foldLeft(lit(false)) {
         case (acc, (p, cut)) =>
           acc || (col("partition") === p && col("offset") <= lit(cut))
       }
-      runPoll(consume(spark, base).filter(pred), groupId, base, handler)
+      handler(tail.filter(pred))
+      commit(groupId, base ++ cutoffs)
+      want
     }
-  }
-
-  /** Shared poll tail: one cached scan serves the HWM/count aggregate
-    * and the handler (the batch used to be scanned three times —
-    * offsets, count, handler), commit after the handler returns
-    * (at-least-once).
-    */
-  private def runPoll(batch: DataFrame, groupId: String,
-                      base: Map[Int, Long],
-                      handler: DataFrame => Unit): Long = {
-    batch.persist()
-    try {
-      val stats = batch.groupBy("partition")
-        .agg(max("offset").as("hwm"), count(lit(1)).as("n"))
-        .collect()
-      val hwms = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val n = stats.map(_.getLong(2)).sum
-      if (n > 0) { handler(batch); commit(groupId, base ++ hwms) }
-      n
-    } finally batch.unpersist()
   }
 
   /** Compact the topic: rewrite each partition's accumulated small
@@ -980,7 +984,7 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
   def compact(spark: SparkSession): Unit = {
     restoreAfterCrashedSwap()
     val tmp = dir + ".compacting"
-    spark.read.parquet(dir)
+    spark.read.schema(schema).parquet(dir)
       .repartition(numPartitions, col("partition"))
       .sortWithinPartitions("partition", "offset")
       .write.mode("overwrite").partitionBy("partition").parquet(tmp)
@@ -1010,7 +1014,7 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     val tmp = dir + ".compacting"
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("key")).orderBy(col("offset").desc)
-    spark.read.parquet(dir)
+    spark.read.schema(schema).parquet(dir)
       .withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1).drop("_rn")
       // tombstone: the key's final record carrying a null payload

@@ -21,7 +21,7 @@ object ProbeRecall {
     def run(df: org.apache.spark.sql.DataFrame): Long =
       df.queryExecution.toRdd.count()
     for (pass <- 1 to 2) {
-      val (truth, mhCaught, shCaught) =
+      val (truth, mhCaught, shCaught, packed) =
         graft.dedup.Dedup.recallBranches(spark, sfDir)
       val nTruth = time(s"p$pass truth (ngramPairs .7 slice)")(truth.count())
       val nDocs = time(s"p$pass truth doc ids")(
@@ -35,7 +35,7 @@ object ProbeRecall {
         println("[rcprobe] ===== mhCaught branch plan (pre-checkpoint) =====")
         mhCaught.explain("formatted")
       }
-      truth.unpersist()
+      (truth +: packed).foreach(_.unpersist())
       time(s"p$pass FULL dedup_recall_eval")(
         run(graft.dedup.Dedup.dedupRecallEval(spark, sfDir)))
       spark.catalog.clearCache()

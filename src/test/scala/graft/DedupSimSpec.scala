@@ -567,12 +567,12 @@ class DedupSimSpec extends AnyFunSuite {
         s"unfused-only: ${(unfused -- fused).take(5)}")
   }
 
-  test("3-core peel: already-converged input is the identity (count-fold convergence)") {
+  test("3-core peel: already-converged input is the identity (empty first peel set)") {
     import spark.implicits._
-    // r19 folds the peel loop's emptiness test into the live-update
-    // count (one heavy action per round). An input that is ALREADY a
-    // 3-core fixpoint must come back untouched after exactly one
-    // no-op round — the count-equality convergence, not an over-peel.
+    // Each peel round checkpoints the low-degree peel set, then tests
+    // it for emptiness. An input that is ALREADY a 3-core fixpoint has
+    // an empty first peel set, so it must come back untouched with no
+    // peel round run — convergence, not an over-peel.
     val und = Seq(
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
       .toDF("a", "b")

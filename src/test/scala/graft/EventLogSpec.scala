@@ -446,6 +446,91 @@ class EventLogSpec extends AnyFunSuite {
     assert(log.committed("g-gap") == log.highWaterMarks(spark))
   }
 
+  /** Runs `op` and returns its result with the properties of every
+    * Spark job it started. A marker job submitted afterwards bounds the
+    * wait: the listener bus delivers events in order, so once the
+    * marker's start arrives, every start of `op` has arrived too.
+    */
+  private def jobsOf[T](op: => T): (T, Seq[java.util.Properties]) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"eventlog-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(e.properties)
+          case Some(g) if g == s"$group-end" => marker.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured operation")
+      val r = try op finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+      (r, jobs.asScala.toVector)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("produce and bounded poll start a pinned number of Spark jobs, none for schema inference") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-jobs").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 4)
+    def batch(from: Int, until: Int) = spark.range(from, until)
+      .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload"))
+    log.produce(batch(0, 100))
+    val (_, produceJobs) = jobsOf(log.produce(batch(100, 200)))
+    val (n, pollJobs) = jobsOf(log.poll(spark, "g", maxMessages = 50)(_.collect()))
+    assert(n == 50)
+    // produce: the high-water-mark aggregate and the write, each a
+    // shuffle stage plus its result; poll: the sizing query's shuffle
+    // stage and result, then the handler's one action
+    for ((op, jobs, bound) <- Seq(("produce", produceJobs, 4), ("poll", pollJobs, 3))) {
+      assert(jobs.nonEmpty && jobs.size <= bound, s"$op started ${jobs.size} jobs (bound $bound)")
+      // schema inference runs while the DataFrame is built, outside any
+      // SQL execution; every job of a query carries its execution id
+      assert(jobs.forall(_.getProperty("spark.sql.execution.id") != null),
+        s"$op started a job outside any query (a parquet schema inference)")
+    }
+  }
+
+  test("a topic dir holding only _temporary (first produce in flight) reads as empty") {
+    val dir = Files.createTempDirectory("graft-inflight").toString + "/event-stream"
+    val attempt = java.nio.file.Paths.get(dir, "_temporary", "0", "_temporary",
+      "attempt_0", "partition=0")
+    Files.createDirectories(attempt)
+    Files.createFile(attempt.resolve("part-00000.snappy.parquet"))
+    val log = new EventLog(dir, numPartitions = 4)
+    assert(log.highWaterMarks(spark).isEmpty)
+    assert(log.consume(spark).count() == 0)
+    assert(log.poll(spark, "g", maxMessages = 10)(_ => fail("empty poll ran handler")) == 0)
+    assert(log.poll(spark, "g")(_ => fail("empty poll ran handler")) == 0)
+    assert(log.committed("g").isEmpty)
+  }
+
+  test("lag is the high-water mark minus the committed offset, uncommitted counted from -1") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lag").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 4)
+    assert(log.lag(spark, "g").isEmpty)
+    log.produce(spark.range(0, 200)
+      .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload")))
+    val produced = log.consume(spark).groupBy($"partition").count()
+      .as[(Int, Long)].collect().toMap
+    assert(produced.size == 4 && produced.values.forall(_ > 10), produced)
+    assert(log.lag(spark, "g") == produced)
+    // partitions 0 and 1 commit their first 10 offsets (0..9)
+    log.commit("g", Map(0 -> 9L, 1 -> 9L))
+    assert(log.lag(spark, "g") ==
+      produced.map { case (p, n) => p -> (if (p <= 1) n - 10 else n) })
+    log.poll(spark, "g")(_ => ())
+    assert(log.lag(spark, "g") == produced.map { case (p, _) => p -> 0L })
+  }
+
   test("readStream maxFilesPerTrigger bounds each micro-batch") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-mfpt").toString + "/event-stream"

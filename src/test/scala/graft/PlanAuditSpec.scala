@@ -510,7 +510,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // plan above, so assert on the PRE-checkpoint branch plans, and
     // on the r19 prune: the signature input is the truth-doc
     // semi-joined sample, not the full slice
-    val (truth, mh, sh) = graft.dedup.Dedup.recallBranches(spark, sf)
+    val (truth, mh, sh, packed) = graft.dedup.Dedup.recallBranches(spark, sf)
     try {
       for ((name, branch) <- Seq("minhash" -> mh, "simhash" -> sh)) {
         val bp = capture(branch, "formatted")
@@ -519,7 +519,7 @@ class PlanAuditSpec extends AnyFunSuite {
         assert(bp.contains("LeftSemi"),
           s"$name branch signatures are not truth-doc pruned\n$bp")
       }
-    } finally { truth.unpersist(); () }
+    } finally { (truth +: packed).foreach(_.unpersist()) }
   }
 
   test("pipeline_split/shard/length_hist: one aggregation shuffle each") {
