@@ -657,11 +657,11 @@ object Dedup {
     // batch bands three times)
     val batch = contentBands(docs.filter($"doc_id" % 4 === 0)).persist()
     incrementalDecisionsPreCollapsed(batch,
-      spark.read.parquet(path + "/classbands")
+      graft.streaming.DedupIngest.readStored(spark, path, "classbands")
         .select($"band_idx", $"band_hash", $"c_class"),
-      spark.read.parquet(path + "/classsizes")
+      graft.streaming.DedupIngest.readStored(spark, path, "classsizes")
         .select($"c_class", $"c_docs"),
-      spark.read.parquet(path + "/hashes").select($"content_hash"))
+      graft.streaming.DedupIngest.readStored(spark, path, "hashes"))
   }
 
   /** (doc_id, content_hash, sig_class, band_idx, band_hash) — the
@@ -780,8 +780,9 @@ object Dedup {
     *     Contract: a doc_id contributes to at most one partial (each
     *     doc is ingested once; a replayed append rewrites its own
     *     partition rather than double-appending).
-    *   - `corpusHashes` (content_hash): the corpus content hashes
-    *     (duplicates fine — semi-join probe side).
+    *   - `corpusHashes` (content_hash; other columns are dropped):
+    *     the corpus content hashes (duplicates fine — semi-join probe
+    *     side).
     * Every aggregate below is bounded by the BATCH and its matches;
     * the corpus relations only ever stream past a broadcast.
     */
@@ -842,7 +843,11 @@ object Dedup {
     // distinct content hashes semi-joined against the corpus hash
     // stream yields the matched hash set without the 32-char strings
     // ever entering the band join.
-    val exactHashes = corpusHashes
+    // Projected to the hash first: a stored relation carries its
+    // ingest_batch, and a hash stored in two batch partitions would
+    // survive the distinct twice and fan the left_outer join out into
+    // two decision rows for one doc.
+    val exactHashes = corpusHashes.select($"content_hash")
       .join(hinted(batchBands.filter($"band_idx" === 0)
         .select($"content_hash").distinct()), Seq("content_hash"),
         "left_semi")

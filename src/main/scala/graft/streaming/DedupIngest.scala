@@ -56,6 +56,23 @@ object DedupIngest {
   private def classSizesPath(p: String) = p + "/classsizes"
   private def hashesPath(p: String) = p + "/hashes"
 
+  /** The stored class relations' data columns; [[writeBatch]] adds the
+    * `ingest_batch` partition column.
+    */
+  private val storedColumns = Map(
+    "classbands" -> "band_idx int, band_hash bigint, c_class bigint",
+    "classsizes" -> "c_class bigint, c_docs bigint",
+    "hashes" -> "content_hash string")
+
+  /** One stored class relation (`classbands`, `classsizes` or
+    * `hashes`) of the index at `indexPath`, read with its known schema
+    * so the read pays no schema-inference job.
+    */
+  private[graft] def readStored(spark: SparkSession, indexPath: String,
+                                relation: String): DataFrame =
+    spark.read.schema(s"${storedColumns(relation)}, ingest_batch bigint")
+      .parquet(s"$indexPath/$relation")
+
   /** The three class-level relations of one batch's band rows — what
     * gets persisted alongside the bands at seed and per append.
     */
@@ -256,12 +273,12 @@ object DedupIngest {
           // nothing. The duplicate-insensitive aggregate alone cannot
           // protect here — it tolerates duplicated CORPUS rows, not a
           // doc's own bands appearing as corpus.
-          def pruned(path: String) = {
+          def pruned(relation: String) = {
             // a restarted ingest may be the first reader after a
             // compaction crash — heal the swapped-away dir (existence
             // checks only in the common case, negligible per batch)
-            restoreAfterCrashedSwap(path)
-            spark.read.parquet(path)
+            restoreAfterCrashedSwap(s"$indexPath/$relation")
+            readStored(spark, indexPath, relation)
               .filter(col("ingest_batch") =!= batchId)
           }
           // the decision join reads the PRE-COLLAPSED class relations
@@ -269,9 +286,7 @@ object DedupIngest {
           // corpus-sized aggregation per increment; partials across
           // batch partitions compose additively inside the join
           Dedup.incrementalDecisionsPreCollapsed(bands,
-              pruned(classBandsPath(indexPath)),
-              pruned(classSizesPath(indexPath)),
-              pruned(hashesPath(indexPath)))
+              pruned("classbands"), pruned("classsizes"), pruned("hashes"))
             .withColumn("ingest_batch", lit(batchId))
             .write.partitionBy("ingest_batch")
             .option("partitionOverwriteMode", "dynamic")

@@ -12,13 +12,14 @@ import org.apache.spark.sql.functions._
   * (`auto.offset.reset=smallest`).
   *
   * Scale notes: every topic read supplies the known [[schema]], so
-  * none pays a schema-inference job. Production is the
-  * ≤ numPartitions-row high-water-mark aggregate (metadata, not data)
-  * and then one narrow pass + a per-partition window for offset
-  * assignment, the marks entering as a literal column. Consumption is
-  * a partition-pruned scan with the offset predicate pushed to
-  * parquet; a bounded poll adds one sizing query over the uncommitted
-  * tail.
+  * none pays a schema-inference job. The high-water marks are
+  * metadata: read on the driver from the parquet footers' `offset`
+  * statistics, no Spark job (a Spark aggregate only when some file
+  * lacks the statistics). Production is one narrow pass + a
+  * per-partition window for offset assignment, the marks entering as
+  * a literal column. Consumption is a partition-pruned scan with the
+  * offset predicate pushed to parquet; a bounded poll adds one sizing
+  * query over the uncommitted tail.
   */
 final class EventLog(val dir: String, val numPartitions: Int = 8,
                      val compression: String = "snappy") {
@@ -80,14 +81,81 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     }
   }
 
-  /** Committed high-water-mark (max offset) per partition. */
+  /** Committed high-water-mark (max offset) per partition; partitions
+    * holding no message are absent. Read on the driver from the parquet
+    * footers — each row group's `offset` max statistic — so it starts
+    * no Spark job, the file-log twin of the log-end offset a Kafka
+    * broker keeps as metadata. The files are the ones `spark.read`
+    * sees: `_`/`.`-prefixed names (`_temporary`, `_SUCCESS`, `.crc`)
+    * are skipped. If any file is not plain parquet or lacks the
+    * statistic (written with `parquet.column.statistics.enabled=false`)
+    * the whole topic falls back to a Spark `max(offset)` aggregate.
+    */
   def highWaterMarks(spark: SparkSession): Map[Int, Long] = {
     restoreAfterCrashedSwap()
-    if (!new java.io.File(dir).exists()) Map.empty
-    else spark.read.schema(schema).parquet(dir)
-      .groupBy("partition").agg(max("offset").as("hwm"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    footerHighWaterMarks().getOrElse(
+      spark.read.schema(schema).parquet(dir)
+        .groupBy("partition").agg(max("offset").as("hwm"))
+        .collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap)
+  }
+
+  private val partitionDirRe = "partition=(\\d+)".r
+
+  /** [[highWaterMarks]] from the footers; None when some file's footer
+    * cannot give its offset maxima or the file sits in a top-level
+    * directory not named `partition=N`.
+    */
+  private def footerHighWaterMarks(): Option[Map[Int, Long]] = {
+    def visible(p: java.nio.file.Path) = {
+      val n = p.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".")
+    }
+    val maxima = for {
+      pd <- listEntries(java.nio.file.Paths.get(dir)) if visible(pd)
+      f <- listEntries(pd) if visible(f)
+    } yield pd.getFileName.toString match {
+      case partitionDirRe(p) => footerOffsetMaxima(f).map(p.toInt -> _)
+      case _ => None
+    }
+    if (maxima.contains(None)) None
+    else Some(maxima.flatten.groupMapReduce(_._1)(_._2)(_ ++ _)
+      .collect { case (p, ms) if ms.nonEmpty => p -> ms.max })
+  }
+
+  /** The `offset` max of each non-empty row group of one parquet file,
+    * decoded from its footer (the file ends with the footer, its 4-byte
+    * little-endian length and the `PAR1` magic). None when the file is
+    * not plain parquet or a row group carries no `offset` statistics.
+    */
+  private def footerOffsetMaxima(f: java.nio.file.Path): Option[Seq[Long]] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    val raf = new java.io.RandomAccessFile(f.toFile, "r")
+    val footer = try {
+      val size = raf.length()
+      val tail = new Array[Byte](8)
+      if (size >= 12) { raf.seek(size - 8); raf.readFully(tail) }
+      val len = java.nio.ByteBuffer.wrap(tail)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      if (new String(tail, 4, 4, "US-ASCII") != "PAR1" || len <= 0 || len > size - 12) None
+      else {
+        val bytes = new Array[Byte](len)
+        raf.seek(size - 8 - len)
+        raf.readFully(bytes)
+        Some(bytes)
+      }
+    } finally raf.close()
+    footer.flatMap { bytes =>
+      val meta = new ParquetMetadataConverter().readParquetMetadata(
+        new java.io.ByteArrayInputStream(bytes), ParquetMetadataConverter.NO_FILTER)
+      val maxima = meta.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "offset")
+          .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
+          .map(_.genericGetMax).collect { case m: java.lang.Long => m.longValue }
+      }
+      if (maxima.contains(None)) None else Some(maxima.flatten)
+    }
   }
 
   /** The topic's message schema (what [[produce]] writes). */

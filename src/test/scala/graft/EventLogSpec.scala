@@ -486,16 +486,66 @@ class EventLogSpec extends AnyFunSuite {
     val (_, produceJobs) = jobsOf(log.produce(batch(100, 200)))
     val (n, pollJobs) = jobsOf(log.poll(spark, "g", maxMessages = 50)(_.collect()))
     assert(n == 50)
-    // produce: the high-water-mark aggregate and the write, each a
-    // shuffle stage plus its result; poll: the sizing query's shuffle
-    // stage and result, then the handler's one action
-    for ((op, jobs, bound) <- Seq(("produce", produceJobs, 4), ("poll", pollJobs, 3))) {
+    // produce: the write, a shuffle stage plus its result (the
+    // high-water marks come from the footers); poll: the sizing query's
+    // shuffle stage and result, then the handler's one action
+    for ((op, jobs, bound) <- Seq(("produce", produceJobs, 2), ("poll", pollJobs, 3))) {
       assert(jobs.nonEmpty && jobs.size <= bound, s"$op started ${jobs.size} jobs (bound $bound)")
       // schema inference runs while the DataFrame is built, outside any
       // SQL execution; every job of a query carries its execution id
       assert(jobs.forall(_.getProperty("spark.sql.execution.id") != null),
         s"$op started a job outside any query (a parquet schema inference)")
     }
+  }
+
+  /** Each partition's max offset as a Spark aggregate over the topic. */
+  private def scannedMarks(log: EventLog): Map[Int, Long] =
+    log.consume(spark).groupBy("partition").agg(max("offset"))
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+  test("high-water marks from the footers equal the scanned max offsets, with no Spark job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-hwm").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 4)
+    def batch(from: Int, until: Int, gen: Int) = spark.range(from, until)
+      .select($"id".cast("string").as("key"), concat(lit(s"$gen:"), $"id").as("payload"))
+    assert(log.highWaterMarks(spark).isEmpty)
+    (0 until 3).foreach(g => log.produce(batch(0, 100, g)))
+    log.produce(batch(100, 130, 3))
+    val produced = scannedMarks(log)
+    assert(produced.size == 4)
+    val (marks, jobs) = jobsOf(log.highWaterMarks(spark))
+    assert(marks == produced)
+    assert(jobs.size == 0, s"highWaterMarks started ${jobs.size} Spark jobs")
+    log.compact(spark)
+    assert(log.highWaterMarks(spark) == produced)
+    // keyed compaction keeps each key's latest record: the surviving
+    // offsets have gaps, and a partition's max is its newest survivor
+    log.produce(batch(0, 50, 4))
+    log.compactByKey(spark)
+    val compacted = scannedMarks(log)
+    assert(log.consume(spark).count() == 130)
+    assert(log.highWaterMarks(spark) == compacted)
+  }
+
+  test("a topic file without offset statistics falls back to the scan, marks unchanged") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-hwm-nostats").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 4)
+    log.produce(spark.range(0, 100)
+      .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload")))
+    // partition 0 gains offsets 1000..1009 in a file whose footer
+    // carries no column statistics
+    spark.range(1000, 1010)
+      .select(lit(0).as("partition"), $"id".as("offset"), $"id".cast("string").as("key"),
+        lit("#").as("payload"), current_timestamp().as("produced_at"))
+      .write.mode("append").option("parquet.column.statistics.enabled", "false")
+      .partitionBy("partition").parquet(dir)
+    val want = scannedMarks(log)
+    assert(want(0) == 1009L)
+    val (marks, jobs) = jobsOf(log.highWaterMarks(spark))
+    assert(marks == want)
+    assert(jobs.nonEmpty, "a statistics-less file must take the Spark fallback")
   }
 
   test("a topic dir holding only _temporary (first produce in flight) reads as empty") {

@@ -408,6 +408,76 @@ class IngestSpec extends AnyFunSuite {
     assert(d.count() == 1)
   }
 
+  test("content stored in two index partitions still gives a batch doc one decision row") {
+    import spark.implicits._
+    val text = "the very same words in every copy of this document"
+    val root = Files.createTempDirectory("graft-ingest-twohash").toString
+    val (inDir, idxDir, decDir, ckpt) =
+      (s"$root/in", s"$root/index", s"$root/decisions", s"$root/ckpt")
+    DedupIngest.seedIndex(Seq((1L, text)).toDF("doc_id", "text"), idxDir)
+    // batch 0 stores the hash a second time (partition 0 beside the
+    // seed's -1); batch 1's copy then matches both partitions
+    Seq((2L, text)).toDF("doc_id", "text").write.parquet(inDir)
+    val q = DedupIngest.start(
+      spark.readStream.schema(spark.read.parquet(inDir).schema).parquet(inDir),
+      idxDir, decDir, ckpt)
+    try {
+      q.processAllAvailable()
+      Seq((3L, text)).toDF("doc_id", "text").write.mode("append").parquet(inDir)
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.read.parquet(decDir)
+      .select($"doc_id", $"decision", $"ingest_batch".cast("long"))
+      .as[(Long, String, Long)].collect().toSeq.sorted
+    assert(got == Seq((2L, "exact_dup", 0L), (3L, "exact_dup", 1L)))
+  }
+
+  test("a DedupIngest micro-batch starts a pinned number of Spark jobs") {
+    import spark.implicits._
+    val docs = graft.core.Tables.documents(spark, sf)
+      .select($"doc_id", $"text")
+    val root = Files.createTempDirectory("graft-ingest-jobs").toString
+    val (inDir, idxDir, decDir, ckpt) =
+      (s"$root/in", s"$root/index", s"$root/decisions", s"$root/ckpt")
+    DedupIngest.seedIndex(docs.filter($"doc_id" % 4 =!= 0), idxDir)
+    docs.filter($"doc_id" % 8 === 0).coalesce(1).write.parquet(inDir)
+    val stream = spark.readStream
+      .schema(spark.read.parquet(inDir).schema).parquet(inDir)
+    // jobs per micro-batch, keyed by the batch id the stream thread
+    // carries in its local properties; a marker job submitted at the
+    // end bounds the wait (the listener bus delivers in order)
+    val sc = spark.sparkContext
+    val perBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => perBatch.merge(b, 1, (x: Integer, y: Integer) => x + y))
+        if (props.exists(_.getProperty("spark.jobGroup.id") == "ingest-jobs-end"))
+          marker.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val q = DedupIngest.start(stream, idxDir, decDir, ckpt)
+      try {
+        q.processAllAvailable()
+        docs.filter($"doc_id" % 4 === 0 && $"doc_id" % 8 =!= 0)
+          .coalesce(1).write.mode("append").parquet(inDir)
+        q.processAllAvailable()
+      } finally q.stop()
+      sc.setJobGroup("ingest-jobs-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job never seen")
+    } finally sc.removeSparkListener(listener)
+    // measured 22 for the second micro-batch: the three stored class
+    // relations are read with their known schemas, so none adds a
+    // schema-inference job (25 when each did)
+    val jobs = perBatch.getOrDefault("1", 0).intValue
+    assert(jobs > 0 && jobs <= 22, s"micro-batch 1 started $jobs jobs (bound 22)")
+  }
+
   test("DSIR ingest: streamed model == batch twin at every prefix; replay-safe; partials metadata-sized") {
     import spark.implicits._
     import graft.streaming.DsirIngest
