@@ -1,73 +1,52 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.GraftSession.local(cpus.toInt)
+    val spark = graft.core.GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    dump(spark, sfDir, outDir, KeyRunner.selected())
+    spark.stop()
+  }
+
+  /** Writes each key's result to `<outDir>/<key>/` as one parquet file,
+    * then `oracle_sql.json` and `errors.json`. A failed key gets an
+    * `_ERROR` marker holding its message in its directory and an entry
+    * in `errors.json`, so the oracle compare reports it as an error
+    * instead of dropping it (a dump that skipped failures once lost 25
+    * keys from the correctness JSON without a trace).
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           keys: Seq[(String, KeyRunner.Key)]): Unit = {
+    import KeyRunner.json
     new java.io.File(outDir).mkdirs()
-    // optional subset for local iteration (driver runs the full set):
-    // SPARK_GRAFT_QUERIES=q_anti_join,dedup_minhash
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None        => SparkEntry.queries
-    }
-    // Failures must be distinguishable from green in the artifact: round 9
-    // skipped the dump on exception and 25 broken keys silently VANISHED
-    // from the correctness JSON (97 entries where 122 were expected). On
-    // error, write an _ERROR marker under the key's output dir plus a
-    // top-level errors.json so the driver reports `err` rather than
-    // dropping the key.
-    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        System.err.println(s"[verify] $name FAILED: $msg")
-        failed(name) = msg
+    val failed = collection.mutable.LinkedHashMap.empty[String, String]
+    for ((name, fn) <- keys) {
+      val ok = KeyRunner.attempt("verify", name, failed) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
+      if (!ok)
         try {
           val dir = Paths.get(s"$outDir/$name")
           Files.createDirectories(dir)
-          Files.writeString(dir.resolve("_ERROR"), msg)
+          Files.writeString(dir.resolve("_ERROR"), failed(name))
         } catch { case m: Throwable =>
           System.err.println(s"[verify] $name marker write failed: ${m.getMessage}")
         }
-      }
-      // drop persisted intermediates (band relations etc.) so caches
-      // don't accumulate across the ~100-query run; localCheckpoint
-      // blocks are pinned RDDs outside the catalog cache, so drop them
-      // too (same hygiene as Bench)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      KeyRunner.release(spark)
     }
     if (failed.nonEmpty)
       System.err.println(failed.map { case (k, v) => s"  $k: $v" }
         .mkString(s"[verify] ${failed.size} QUERIES FAILED:\n", "\n", ""))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val errJson = failed
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
-    spark.stop()
+    def obj(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), obj(failed))
   }
 }

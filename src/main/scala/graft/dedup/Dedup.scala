@@ -133,7 +133,7 @@ object Dedup {
       .groupBy($"tok").agg(count(lit(1)).as("df"))
       .persist()
     // Degenerate-vocabulary guardrail (round-9 scaling disposition,
-    // SCALING_NOTES_r09.md): when the corpus vocabulary is tiny, every
+    // history/SCALING_NOTES_r09.md): when the corpus vocabulary is tiny, every
     // token's df ≈ N/|vocab| and prefix filtering stops discriminating —
     // the candidate join degenerates toward within-source all-pairs
     // (224M joined rows at sf10, 25% of the whole bench). No candidate
@@ -220,21 +220,6 @@ object Dedup {
       .filter($"jaccard" >= lit(tau))
       .select($"doc_id_1", $"doc_id_2", round($"jaccard", 4).as("jaccard"))
       .distinct()
-  }
-
-  /** Candidate stage of the merge-scan path, split out so the scaling
-    * probe (tools/ProbeNgram) can time candidates vs verify
-    * separately. Returns (pinned doc+prefix relation, candidate id
-    * pairs).
-    */
-  private[graft] def ngramCandidates(
-      spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val d = withWordSet(Tables.documents(spark, sfDir))
-      .select($"doc_id", $"source", array_sort($"wset").as("wset"))
-    val tokenDf = d.select(explode($"wset").as("tok"))
-      .groupBy($"tok").agg(count(lit(1)).as("df"))
-    prefixCandidates(d, tokenDf, 9000)
   }
 
   private def prefixCandidates(

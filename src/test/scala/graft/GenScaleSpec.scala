@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 /** The scale-up generator underpins the round's empirical linearity
-  * claims (BENCH_SCALING_r06.json), so its invariants are locked
+  * claims (history/BENCH_SCALING_r06.json), so its invariants are locked
   * here: clean N× cardinality, disjoint key spaces, preserved
   * within-copy near-dup structure, no cross-copy near-dups, and
   * norm-preserving embedding rotation.
