@@ -16,7 +16,8 @@ object Verify {
   }
 
   /** Writes each key's result to `<outDir>/<key>/` as one parquet file,
-    * then `oracle_sql.json` and `errors.json`. A failed key gets an
+    * then `oracle_sql.json` (these keys' oracle SQL only, so a subset
+    * run compares what it dumped) and `errors.json`. A failed key gets an
     * `_ERROR` marker holding its message in its directory and an entry
     * in `errors.json`, so the oracle compare reports it as an error
     * instead of dropping it (a dump that skipped failures once lost 25
@@ -46,7 +47,9 @@ object Verify {
         .mkString(s"[verify] ${failed.size} QUERIES FAILED:\n", "\n", ""))
     def obj(m: Iterable[(String, String)]): String =
       m.map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    val dumped = keys.map(_._1).toSet
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      obj(SparkEntry.oracleSql.filter { case (k, _) => dumped(k) }))
     Files.writeString(Paths.get(s"$outDir/errors.json"), obj(failed))
   }
 }

@@ -2,7 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Fixpoint, Tables}
 
 /** Deduplication operators over the `documents` table: exact,
   * MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine.
@@ -344,48 +344,39 @@ object Dedup {
     * unrolled min-propagation hops under-merge chain-shaped clusters
     * (A~B~C~D~E where the ends share no bucket — a real corpus has
     * chained near-dups: successive revisions of the same page each
-    * overlap their neighbors). The fixpoint here is the same
-    * pin-the-edge-set iteration as [[graft.graph.Graph.graphComponents]]
-    * but runs directly on the BIPARTITE doc↔bucket relation: each hop
-    * is bucket-min then doc-min — two shuffles linear in the band
-    * relation — and never materializes doc–doc pairs, which inside a
-    * large dup cluster would be quadratic. `localCheckpoint` cuts the
-    * lineage per hop so plan size stays constant; the hop guard is a
-    * runaway check, not a correctness bound (exit is the converged
-    * count, and a guard hit raises rather than returning a
-    * half-propagated labeling). Chain under-merge vs fixpoint is
-    * spec-asserted in DedupSimSpec.
+    * overlap their neighbors). The labeling is [[bandLabels]]: star
+    * contraction over the bucket-star edge list, which is linear in
+    * the band relation and never materializes doc–doc pairs (inside
+    * a large dup cluster those would be quadratic). Chain under-merge
+    * vs fixpoint is spec-asserted in DedupSimSpec.
     */
   def dedupComponents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val bands = minhashBands(Tables.documents(spark, sfDir)).persist()
     try {
-      // DEFAULT = star contraction since the r12 A/B: same-protocol
-      // sf10 probes measured star 15.5/13.3/13.1 s vs propagation
-      // 16.2/16.1 s (the bucket graph contracts to min-rooted stars
-      // in 4 rounds; the propagation loop paid 5 band-sized hops).
-      // -Dspark.graft.ccAlgo=prop re-selects the propagation twin.
-      val labels =
-        if (sys.props.get("spark.graft.ccAlgo").contains("prop"))
-          bandComponents(bands)
-        else {
-          // star edges of the bucket graph: member → bucket min is
-          // connectivity-equivalent to the co-bucket clique and LINEAR
-          // in band rows (never within-bucket quadratic)
-          val bmin = bands.groupBy($"band_idx", $"band_hash")
-            .agg(min($"doc_id").as("bmin"))
-          val edges = bands.join(bmin, Seq("band_idx", "band_hash"))
-            .filter($"doc_id" =!= $"bmin")
-            .select($"doc_id".as("u"), $"bmin".as("v")).distinct()
-          val star = starComponents(edges)
-          bands.select($"doc_id").distinct()
-            .join(star, Seq("doc_id"), "left_outer")
-            .select($"doc_id", coalesce($"comp", $"doc_id").as("comp"))
-        }
-      labels
+      bandLabels(bands)
         .select($"doc_id", $"comp".as("component"),
                 ($"doc_id" =!= $"comp").as("is_dup"))
     } finally bands.unpersist()
+  }
+
+  /** (doc_id, comp) for every doc of a (doc_id, band_idx, band_hash)
+    * relation, comp = the smallest doc_id reachable through shared
+    * buckets. The star edges of the bucket graph (member → bucket min)
+    * are connectivity-equivalent to the co-bucket clique and LINEAR in
+    * band rows; [[starComponents]] contracts them (r12: 13.1–15.5 s vs
+    * 16.1–16.2 s for bucket-pass label propagation in sf10 probes).
+    */
+  private[graft] def bandLabels(bands: DataFrame): DataFrame = {
+    import bands.sparkSession.implicits._
+    val bmin = bands.groupBy($"band_idx", $"band_hash")
+      .agg(min($"doc_id").as("bmin"))
+    val edges = bands.join(bmin, Seq("band_idx", "band_hash"))
+      .filter($"doc_id" =!= $"bmin")
+      .select($"doc_id".as("u"), $"bmin".as("v")).distinct()
+    bands.select($"doc_id").distinct()
+      .join(starComponents(edges), Seq("doc_id"), "left_outer")
+      .select($"doc_id", coalesce($"comp", $"doc_id").as("comp"))
   }
 
   /** Canonical-document selection per near-dup cluster — the KEEPER
@@ -426,9 +417,9 @@ object Dedup {
 
   /** Alternating large-star / small-star contraction (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) over an
-    * undirected edge list — the round-11 verdict's A/B candidate
-    * against [[bandComponents]]' pointer-jumped label propagation for
-    * the 96%-giant-component band graph. Input: (u, v) edges (any
+    * undirected edge list — the component labeling behind
+    * [[bandLabels]] (a 96%-giant-component band graph) and the
+    * phash clusters. Input: (u, v) edges (any
     * orientation, self-loops tolerated); output: (doc_id, comp) for
     * every node incident to at least one edge, comp = the component's
     * minimum node id (isolated nodes are the caller's join-back).
@@ -442,38 +433,34 @@ object Dedup {
     * clusters (which arrive as near-stars around each bucket min).
     * Convergence = the canonical edge set is unchanged by a round
     * (subset via exceptAll + equal count — both sides are distinct
-    * canonical pairs, so that IS set equality).
+    * canonical pairs, so that IS set equality); the round guard
+    * raises rather than returning a half-contracted edge set.
     */
   private[graft] def starComponents(edges0: DataFrame): DataFrame = {
     import edges0.sparkSession.implicits._
-    var edges = edges0
-      .select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
-      .filter($"u" =!= $"v").distinct().localCheckpoint()
-    var n = edges.count()
-    var converged = n == 0
-    var rounds = 0
-    while (!converged) {
-      assert(rounds < 50, "star contraction exceeded the round guard")
-      // large-star: every canonical edge (a,b), a<b, is neighbor b>a
-      // at center a → emit (m(a), b); m ≤ a < b keeps pairs canonical
-      val mL = minOverNeighbors(edges)
-      val ls = edges.join(mL, $"u" === $"x")
-        .select($"m".as("u"), $"v").distinct().localCheckpoint()
-      // small-star: every canonical edge (a,b) is neighbor a≤b at
-      // center b → emit (m(b), a), plus each center's own (m(b), b)
-      val mS = minOverNeighbors(ls)
-      val next = ls.join(mS, $"v" === $"x")
-        .select($"m".as("u"), $"u".as("v"))
-        .union(mS.select($"m".as("u"), $"x".as("v")))
+    val (edges, _) = Fixpoint.converge("star contraction", 49) {
+      val start = edges0
+        .select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
         .filter($"u" =!= $"v").distinct().localCheckpoint()
-      val nNext = next.count()
-      converged = nNext == n && next.exceptAll(edges).isEmpty
-      edges = next
-      n = nNext
-      rounds += 1
-    }
-    if (sys.env.contains("SPARK_GRAFT_TRACE"))
-      System.err.println(s"[graft-trace] starComponents converged in $rounds rounds")
+      (start, start.count())
+    } {
+      case (edges, 0L) => ((edges, 0L), false) // no edges: nothing to contract
+      case (edges, n) =>
+        // large-star: every canonical edge (a,b), a<b, is neighbor b>a
+        // at center a → emit (m(a), b); m ≤ a < b keeps pairs canonical
+        val mL = minOverNeighbors(edges)
+        val ls = edges.join(mL, $"u" === $"x")
+          .select($"m".as("u"), $"v").distinct().localCheckpoint()
+        // small-star: every canonical edge (a,b) is neighbor a≤b at
+        // center b → emit (m(b), a), plus each center's own (m(b), b)
+        val mS = minOverNeighbors(ls)
+        val next = ls.join(mS, $"v" === $"x")
+          .select($"m".as("u"), $"u".as("v"))
+          .union(mS.select($"m".as("u"), $"x".as("v")))
+          .filter($"u" =!= $"v").distinct().localCheckpoint()
+        val nNext = next.count()
+        ((next, nNext), !(nNext == n && next.exceptAll(edges).isEmpty))
+      }
     // the fixpoint is min-rooted stars: every member's one neighbor
     // is its component min, and each root labels itself
     edges.select($"v".as("doc_id"), $"u".as("comp"))
@@ -489,83 +476,6 @@ object Dedup {
     edges.select($"u".as("x"), $"v".as("y"))
       .union(edges.select($"v".as("x"), $"u".as("y")))
       .groupBy($"x").agg(least($"x", min($"y")).as("m"))
-  }
-
-  /** Fixpoint min-label propagation over a (doc_id, band_idx,
-    * band_hash) relation. Every doc is in its own buckets, so the
-    * bucket-min pass always covers every doc and labels only ever
-    * decrease; convergence = no label changed in a hop.
-    *
-    * Deliberately a FULL-RECOMPUTE loop: a Flink-style delta
-    * iteration (recompute only buckets touched by the changed-label
-    * frontier) was implemented and measured SLOWER here (12.0 s vs
-    * 10.5 s at sf1, 7 hops) — the per-hop left-join merging the
-    * shrinking update set back over the full labeling costs more
-    * than the restricted aggregation saves, because near-dup
-    * frontiers stay wide for most of the (short) chain depth. The
-    * simple loop also keeps every hop two plain co-partitioned
-    * shuffles of the pinned band relation.
-    *
-    * Since r12 this is the A/B TWIN, not the default:
-    * [[starComponents]] over the bucket-star edge list measured
-    * faster at sf10 (13.1-15.5 s vs 16.1-16.2 s same-protocol
-    * probes) because the star edge list dedups to one row per
-    * (member, bucket-min) while every propagation hop re-shuffles
-    * the full 8-band relation. Kept callable via
-    * -Dspark.graft.ccAlgo=prop and pinned equal on the corpus by
-    * DedupSimSpec's cross-check.
-    */
-  private[graft] def bandComponents(bands: DataFrame): DataFrame = {
-    import bands.sparkSession.implicits._
-    // hop 1 unrolled: against the identity labeling the bucket min is
-    // just min(doc_id), so the generic hop's labels-join would join a
-    // relation to itself for nothing (same saving as dedupMinhash's
-    // unroll); nmin ≤ doc_id always, so least() and the changed flag
-    // are also free here
-    var labels = bands
-      .join(bands.groupBy($"band_idx", $"band_hash")
-              .agg(min($"doc_id").as("bmin")),
-            Seq("band_idx", "band_hash"))
-      .groupBy($"doc_id").agg(min($"bmin").as("comp"))
-      .localCheckpoint()
-    var converged = false
-    var hops = 1
-    while (!converged) {
-      assert(hops < 50, "band-graph component diameter exceeded the hop guard")
-      val bucketMin = bands.join(labels, Seq("doc_id"))
-        .groupBy($"band_idx", $"band_hash")
-        .agg(min($"comp").as("bmin"))
-      // the changed flag rides the same pass — convergence costs no
-      // extra join against the previous labeling
-      val next = bands.join(bucketMin, Seq("band_idx", "band_hash"))
-        .groupBy($"doc_id").agg(min($"bmin").as("nmin"))
-        .join(labels, Seq("doc_id"))
-        .select($"doc_id", least($"comp", $"nmin").as("comp"),
-                ($"nmin" < $"comp").as("changed"))
-        .localCheckpoint() // cut lineage: constant plan size per hop
-      converged = next.filter($"changed").isEmpty
-      // pointer jump: comp ← comp(comp). Labels are doc ids, the map is
-      // total, and comp(x) ≤ x, so the composition only decreases and
-      // stays inside the component — correctness-neutral, but it
-      // shortcuts label chains so the giant component converges in
-      // ~log(diameter) bucket passes instead of diameter (measured 9 →
-      // 5 hops at sf10 on the regenerated corpus). Two label-sized
-      // shuffles per hop vs the band-sized passes they save. The
-      // convergence test stays sound: it fires on the BUCKET pass
-      // changing nothing, which alone implies the labeling is constant
-      // on every component (the jump is the identity at that point).
-      labels =
-        if (converged) next.drop("changed")
-        else next.select($"doc_id", $"comp").as("v")
-          .join(next.select($"doc_id".as("j"), $"comp".as("jcomp")),
-                $"comp" === $"j")
-          .select($"doc_id", $"jcomp".as("comp"))
-          .localCheckpoint()
-      hops += 1
-    }
-    if (sys.env.contains("SPARK_GRAFT_TRACE"))
-      System.err.println(s"[graft-trace] bandComponents converged in $hops hops")
-    labels
   }
 
   /** Incremental (cross-corpus) dedup: a NEW BATCH of documents

@@ -2,7 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Fixpoint, Tables}
 
 /** Iterative graph algorithms over similarity edges — the family the
   * dedup pipeline's connected components belong to, exposed as its
@@ -46,14 +46,11 @@ object Graph {
     // through every hop when the connected part is a tiny fraction
     // (near-dup graphs at corpus scale: most docs are unique).
     // Symmetrized edges mean the `a` side alone covers all endpoints.
-    var labels = edges.select($"a".as("vec_id")).distinct()
-      .withColumn("comp", $"vec_id")
-      .localCheckpoint()
     try {
-      var converged = false
-      var hops = 0
-      while (!converged) {
-        assert(hops < 50, "component diameter exceeded the hop guard")
+      val labels = Fixpoint.converge("component labeling", 49)(
+        edges.select($"a".as("vec_id")).distinct()
+          .withColumn("comp", $"vec_id")
+          .localCheckpoint()) { labels =>
         val nbrMin = edges
           .join(labels.select($"vec_id".as("b"), $"comp".as("nbr_comp")), Seq("b"))
           .groupBy($"a").agg(min($"nbr_comp").as("nbr_comp"))
@@ -65,9 +62,7 @@ object Graph {
           .select($"vec_id", least($"comp", $"nbr_comp").as("comp"),
                   ($"nbr_comp" < $"comp").as("changed"))
           .localCheckpoint() // cut lineage: constant plan size per hop
-        converged = next.filter($"changed").isEmpty
-        labels = next.drop("changed")
-        hops += 1
+        (next.drop("changed"), !next.filter($"changed").isEmpty)
       }
       // isolated nodes rejoin as their own components on the way out
       Tables.embeddings(spark, sfDir).select($"vec_id")
@@ -435,30 +430,21 @@ object Graph {
   // coreness. Kept the measured-good 2-action shape below.
   private def peelFixpoint(edges: DataFrame, k: Int): DataFrame = {
     import edges.sparkSession.implicits._
-    var live = edges
-    var rounds = 0
-    var converged = false
-    while (!converged) {
+    // 30 peels: the oracle generates 30 rounds, so a cascade that
+    // CONVERGES on its 30th peel is replayable (r12 advice)
+    Fixpoint.converge("k-core cascade", 30)(edges) { live =>
       // checkpoint the (tiny) peel set: it is consumed by isEmpty AND
       // both anti-joins — unpinned, the degree aggregate over `live`
       // would run twice per round
       val low = live.groupBy($"a").agg(count(lit(1)).as("deg"))
         .filter($"deg" < k).select($"a").localCheckpoint()
-      if (low.isEmpty) converged = true
-      else {
-        // guard only when another peel is actually required: the
-        // oracle generates 30 rounds, so a cascade that CONVERGES on
-        // round 30 is replayable — raising before the isEmpty test
-        // rejected a case the oracle accepts (r12 advice)
-        assert(rounds < 30, "k-core cascade exceeded the round guard")
-        live = live
-          .join(low, Seq("a"), "left_anti")
-          .join(low.withColumnRenamed("a", "b"), Seq("b"), "left_anti")
-          .localCheckpoint() // cut lineage: constant plan size per round
-        rounds += 1
-      }
+      if (low.isEmpty) (live, false)
+      else (live
+        .join(low, Seq("a"), "left_anti")
+        .join(low.withColumnRenamed("a", "b"), Seq("b"), "left_anti")
+        .localCheckpoint(), // cut lineage: constant plan size per round
+        true)
     }
-    live
   }
 
   /** Full core decomposition of the mutual-kNN similarity graph —

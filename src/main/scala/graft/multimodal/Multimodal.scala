@@ -236,7 +236,7 @@ object Multimodal {
     * executes after pair generation (pairs are evidence; the cluster
     * rep is the decision). Transitive closure via the shared
     * alternating large-star/small-star contraction
-    * ([[graft.dedup.Dedup.starComponents]], the r12 CC default), so
+    * ([[graft.dedup.Dedup.starComponents]], as in dedup_components), so
     * hamming-chained blobs (a~b, b~c, a!~c) land in ONE cluster.
     *
     * Scale: this is the LINEAR-output face of the pair family — on a

@@ -54,7 +54,7 @@ class DedupSimSpec extends AnyFunSuite {
     assert(got == want, s"span accounting mismatch:\n got ${got.toSeq.sortBy(_._1)}\nwant ${want.toSeq.sortBy(_._1)}")
   }
 
-  test("star contraction == label propagation on the corpus band graph; chain merges fully") {
+  test("band labels == driver-side union-find on the corpus band graph; chain merges") {
     import spark.implicits._
     // a path graph is the star algorithms' worst case (maximum
     // diameter per edge) and the chain shape the 2-hop propagation
@@ -65,23 +65,27 @@ class DedupSimSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     val want = (1L to 7L).map(i => (i, 1L)).toSet ++ Set((8L, 8L), (9L, 8L))
     assert(got == want, s"chain contraction wrong: $got")
-    // corpus cross-check: the two algorithms must produce the SAME
-    // labeling on the real band graph (both label with component min)
+    // corpus cross-check: the production labeling must equal a plain
+    // union-find over the collected band rows (docs sharing a bucket
+    // are joined; each set's root is kept at its smallest doc_id)
     val docs = graft.core.Tables.documents(spark, sf)
     val bands = Dedup.minhashBands(docs).persist()
     try {
-      val bmin = bands.groupBy($"band_idx", $"band_hash")
-        .agg(min($"doc_id").as("bmin"))
-      val edges = bands.join(bmin, Seq("band_idx", "band_hash"))
-        .filter($"doc_id" =!= $"bmin")
-        .select($"doc_id".as("u"), $"bmin".as("v")).distinct()
-      val star = bands.select($"doc_id").distinct()
-        .join(Dedup.starComponents(edges), Seq("doc_id"), "left_outer")
-        .select($"doc_id", coalesce($"comp", $"doc_id").as("comp"))
-        .as[(Long, Long)].collect().toSet
-      val prop = Dedup.bandComponents(bands)
-        .as[(Long, Long)].collect().toSet
-      assert(star == prop, "star and propagation labelings diverge")
+      val star = Dedup.bandLabels(bands).as[(Long, Long)].collect().toMap
+      val rows = bands.select($"doc_id", $"band_idx", $"band_hash").collect()
+      val parent = collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      for ((_, bucket) <- rows.groupBy(r => (r.get(1), r.get(2))); r <- bucket) {
+        val (a, b) = (find(bucket.head.getLong(0)), find(r.getLong(0)))
+        if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      }
+      val uf = rows.map(_.getLong(0)).distinct.map(d => d -> find(d)).toMap
+      assert(star.size == docs.count())
+      assert(star.values.toSet.size < star.size, "vacuous: no doc shares a bucket")
+      assert(star == uf, "star labeling diverges from the union-find")
     } finally bands.unpersist()
   }
 
@@ -115,7 +119,7 @@ class DedupSimSpec extends AnyFunSuite {
       (9L, 0, 99L)
     ).toDF("doc_id", "band_idx", "band_hash")
     // the fixpoint closes the whole chain to min-id 1
-    val fix = Dedup.bandComponents(bands)
+    val fix = Dedup.bandLabels(bands)
       .as[(Long, Long)].collect().toMap
     assert(fix == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
                       9L -> 9L))

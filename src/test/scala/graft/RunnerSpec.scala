@@ -41,8 +41,12 @@ class RunnerSpec extends AnyFunSuite {
     val errs = mapper.readTree(Paths.get(s"$out/errors.json").toFile)
     assert(errs.fieldNames.asScala.toSeq == Seq(broken))
     assert(errs.get(broken).asText.contains("injected failure"))
-    assert(mapper.readTree(Paths.get(s"$out/oracle_sql.json").toFile).size ==
-      SparkEntry.oracleSql.size)
+    // only the dumped keys' oracle SQL: a subset run reports no key it
+    // never ran; every oracle key is a query key, so a full run keeps all
+    val oracle = mapper.readTree(Paths.get(s"$out/oracle_sql.json").toFile)
+    assert(oracle.fieldNames.asScala.toSet == good.toSet)
+    for (k <- good) assert(oracle.get(k).asText == SparkEntry.oracleSql(k), k)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 

@@ -9,7 +9,7 @@ R=${1:?round tag, e.g. r08}
 run () {
   local dir=$1 label=$2 mem=$3 logp=$4
   SPARK_DRIVER_MEM=$mem SPARK_GRAFT_SF_DIR=$dir SPARK_GRAFT_CPUS=32 \
-  SPARK_GRAFT_PASSES=2 SPARK_GRAFT_TRACE=1 \
+  SPARK_GRAFT_PASSES=2 \
   SPARK_GRAFT_JAVA_OPTS="-Dspark.graft.logPartitions=$logp" \
   SPARK_GRAFT_TRACE_OUT=BENCH_TRACE_${label}_${R}.txt \
   sbt -batch "runMain graft.Bench" > /tmp/bench_${label}_${R}.log 2>&1

@@ -261,13 +261,13 @@ python3 tools/gen_truth_stage.py /root/repo/bench-data/sf10 $MHSTAGE
 SPARK_GRAFT_QUERIES=$SUBSET SPARK_GRAFT_CPUS=16 SPARK_DRIVER_MEM=24g \
   sbt -batch "runMain graft.Verify /root/repo/bench-data/sf10 $OUT" \
   > /tmp/verify_sf10_${R}.log 2>&1
-# Verify dumps the FULL oracle map; prune to the subset so the
-# artifact reports only what actually ran
-python3 - "$OUT" "$SUBSET" <<'EOF'
+# Verify writes the oracle SQL of the subset only; swap the staged
+# oracles into it
+python3 - "$OUT" <<'EOF'
 import json, sys
-out, subset = sys.argv[1], set(sys.argv[2].split(","))
+out = sys.argv[1]
 p = f"{out}/oracle_sql.json"
-d = {k: v for k, v in json.load(open(p)).items() if k in subset}
+d = json.load(open(p))
 # swap in the staged (temp-table) oracle for the IVF+SQ pair — the
 # inline single-query form spills at sf10 (see header comment)
 staged = open("tools/oracle_sim_ivfsq_staged.sql").read()
