@@ -18,11 +18,16 @@ import org.apache.spark.sql.functions._
   * lacks the statistics). Production is one narrow pass + a
   * per-partition window for offset assignment, the marks entering as
   * a literal column. Consumption is a partition-pruned scan with the
-  * offset predicate pushed to parquet; a bounded poll adds one sizing
-  * query over the uncommitted tail.
+  * offset predicate pushed to parquet. A bounded poll plans its
+  * cutoffs from the same footers, so it starts only the handler's
+  * jobs; a one-query sizing fallback covers topics the footers cannot
+  * plan (gaps left by keyed compaction, overlapping files, missing
+  * statistics). That plan is a snapshot taken before the handler's
+  * file listing, so the commit never passes what the handler saw.
   */
 final class EventLog(val dir: String, val numPartitions: Int = 8,
                      val compression: String = "snappy") {
+  import EventLog.FileOffsets
 
   /** Append keyed messages. `records` must have `key: string` and
     * `payload: string` columns. Partition = hash(key) mod P (the
@@ -83,52 +88,58 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
 
   /** Committed high-water-mark (max offset) per partition; partitions
     * holding no message are absent. Read on the driver from the parquet
-    * footers — each row group's `offset` max statistic — so it starts
+    * footers — the per-partition max of [[footerIndex]] — so it starts
     * no Spark job, the file-log twin of the log-end offset a Kafka
-    * broker keeps as metadata. The files are the ones `spark.read`
-    * sees: `_`/`.`-prefixed names (`_temporary`, `_SUCCESS`, `.crc`)
-    * are skipped. If any file is not plain parquet or lacks the
-    * statistic (written with `parquet.column.statistics.enabled=false`)
-    * the whole topic falls back to a Spark `max(offset)` aggregate.
+    * broker keeps as metadata. If any file is not plain parquet or lacks
+    * the `offset` statistics (written with
+    * `parquet.column.statistics.enabled=false`) the whole topic falls
+    * back to a Spark `max(offset)` aggregate.
     */
   def highWaterMarks(spark: SparkSession): Map[Int, Long] = {
     restoreAfterCrashedSwap()
-    footerHighWaterMarks().getOrElse(
-      spark.read.schema(schema).parquet(dir)
-        .groupBy("partition").agg(max("offset").as("hwm"))
-        .collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    footerIndex() match {
+      case Some(files) => files.groupMapReduce(_.partition)(_.max)(math.max)
+      case None =>
+        spark.read.schema(schema).parquet(dir)
+          .groupBy("partition").agg(max("offset").as("hwm"))
+          .collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
   }
 
   private val partitionDirRe = "partition=(\\d+)".r
 
-  /** [[highWaterMarks]] from the footers; None when some file's footer
-    * cannot give its offset maxima or the file sits in a top-level
+  /** Every topic file's [[FileOffsets]], decoded on the driver from the
+    * footers, no Spark job; files holding no row are left out. The files
+    * are the ones `spark.read` sees: `_`/`.`-prefixed names
+    * (`_temporary`, `_SUCCESS`, `.crc`) are skipped. None when some
+    * file's footer cannot give its range or the file sits in a top-level
     * directory not named `partition=N`.
     */
-  private def footerHighWaterMarks(): Option[Map[Int, Long]] = {
+  private def footerIndex(): Option[Seq[FileOffsets]] = {
     def visible(p: java.nio.file.Path) = {
       val n = p.getFileName.toString
       !n.startsWith("_") && !n.startsWith(".")
     }
-    val maxima = for {
+    val files = for {
       pd <- listEntries(java.nio.file.Paths.get(dir)) if visible(pd)
       f <- listEntries(pd) if visible(f)
     } yield pd.getFileName.toString match {
-      case partitionDirRe(p) => footerOffsetMaxima(f).map(p.toInt -> _)
+      case partitionDirRe(p) => footerRowGroups(f).map(_.reduceOption { (a, b) =>
+        (math.min(a._1, b._1), math.max(a._2, b._2), a._3 + b._3)
+      }.map { case (lo, hi, n) => FileOffsets(p.toInt, lo, hi, n) })
       case _ => None
     }
-    if (maxima.contains(None)) None
-    else Some(maxima.flatten.groupMapReduce(_._1)(_._2)(_ ++ _)
-      .collect { case (p, ms) if ms.nonEmpty => p -> ms.max })
+    if (files.contains(None)) None else Some(files.flatten.flatten)
   }
 
-  /** The `offset` max of each non-empty row group of one parquet file,
-    * decoded from its footer (the file ends with the footer, its 4-byte
-    * little-endian length and the `PAR1` magic). None when the file is
-    * not plain parquet or a row group carries no `offset` statistics.
+  /** The `offset` (min, max, non-null count) of each non-empty row group
+    * of one parquet file, decoded from its footer (the file ends with the
+    * footer, its 4-byte little-endian length and the `PAR1` magic). None
+    * when the file is not plain parquet or a row group carries no
+    * `offset` statistics.
     */
-  private def footerOffsetMaxima(f: java.nio.file.Path): Option[Seq[Long]] = {
+  private def footerRowGroups(f: java.nio.file.Path): Option[Seq[(Long, Long, Long)]] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.format.converter.ParquetMetadataConverter
     val raf = new java.io.RandomAccessFile(f.toFile, "r")
@@ -149,12 +160,14 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     footer.flatMap { bytes =>
       val meta = new ParquetMetadataConverter().readParquetMetadata(
         new java.io.ByteArrayInputStream(bytes), ParquetMetadataConverter.NO_FILTER)
-      val maxima = meta.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
+      val groups = meta.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { b =>
         b.getColumns.asScala.find(_.getPath.toDotString == "offset")
-          .map(_.getStatistics).filter(s => s != null && s.hasNonNullValue)
-          .map(_.genericGetMax).collect { case m: java.lang.Long => m.longValue }
+          .map(_.getStatistics)
+          .filter(s => s != null && s.hasNonNullValue && s.isNumNullsSet)
+          .collect { case s: org.apache.parquet.column.statistics.LongStatistics =>
+            (s.getMin, s.getMax, b.getRowCount - s.getNumNulls) }
       }
-      if (maxima.contains(None)) None else Some(maxima.flatten)
+      if (groups.contains(None)) None else Some(groups.flatten)
     }
   }
 
@@ -985,58 +998,120 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
     * taken, so positions stay valid across compaction. Repeated polls
     * drain the backlog in bounded steps — a consumer restarted after
     * downtime processes the outage in `maxMessages`-sized batches
-    * instead of one unbounded one. Costs one sizing query over the
-    * pruned uncommitted tail: per partition, the backlog count and
-    * the `maxMessages` smallest offsets (window functions over one
-    * shuffle; ≤ P × `maxMessages` rows collected — no allocation
-    * reaches past that rank). The cutoffs, the commit and the count
-    * follow on the driver, and the batch predicate is plain
-    * `offset <= cutoff` per partition, which pushes to the parquet
-    * scan. Offsets appended after the sizing query lie past every
-    * cutoff, so a concurrent produce cannot change the batch.
+    * instead of one unbounded one.
+    *
+    * The plan (cutoffs and count) comes from the footers
+    * ([[footerPlan]]): an empty poll starts no Spark job and a
+    * non-empty one only the handler's. Only when a file the poll could
+    * read has gaps or overlaps another, or some footer lacks the
+    * `offset` statistics, does the call fall back to the sizing query
+    * ([[sizingPlan]]). The batch predicate is plain `offset <= cutoff`
+    * per partition, which pushes to the parquet scan.
+    *
+    * The snapshot comes BEFORE the handler's listing: the plan reads
+    * the topic first, and only then is the handler's frame built (its
+    * file listing taken). A file landing after the snapshot holds only
+    * offsets above every cutoff of its partition, so the handler sees
+    * each offset the commit covers. Listing first would let a file
+    * land between the two reads: its offsets would enter the cutoffs
+    * but not the batch, and the commit would pass messages the handler
+    * never saw.
     */
   def poll(spark: SparkSession, groupId: String, maxMessages: Long)
           (handler: DataFrame => Unit): Long = {
     require(maxMessages > 0, s"maxMessages must be positive: $maxMessages")
     val base = committed(groupId)
-    val tail = consume(spark, base)
+    val (cutoffs, n) = footerPlan(base, maxMessages)
+      .getOrElse(sizingPlan(spark, base, maxMessages))
+    if (n > 0) {
+      val pred = cutoffs.foldLeft(lit(false)) {
+        case (acc, (p, cut)) =>
+          acc || (col("partition") === p && col("offset") <= lit(cut))
+      }
+      handler(consume(spark, base).filter(pred))
+      commit(groupId, base ++ cutoffs)
+    }
+    n
+  }
+
+  /** The bounded poll's plan from the footers alone: per partition, the
+    * uncommitted part of each file is a contiguous offset range, so the
+    * backlog is the sum of the range lengths and the k-th smallest
+    * uncommitted offset is a walk over the sorted ranges. Exact when
+    * every file holding an uncommitted offset is dense and a
+    * partition's uncommitted ranges are disjoint; None otherwise (or
+    * when [[footerIndex]] is None) — the caller then runs
+    * [[sizingPlan]].
+    */
+  private[graft] def footerPlan(base: Map[Int, Long],
+                                maxMessages: Long): Option[(Map[Int, Long], Long)] = {
+    restoreAfterCrashedSwap()
+    footerIndex().flatMap { files =>
+      val tails = files.filter(f => f.max > base.getOrElse(f.partition, -1L))
+      val ranges = tails.groupBy(_.partition).map { case (p, fs) =>
+        p -> fs.map(f => (math.max(f.min, base.getOrElse(p, -1L) + 1), f.max))
+          .sortBy(_._1).toList }
+      val disjoint = ranges.values.forall(rs =>
+        rs.zip(rs.drop(1)).forall { case (a, b) => a._2 < b._1 })
+      if (!tails.forall(_.dense) || !disjoint) None
+      else {
+        @annotation.tailrec
+        def kth(rs: List[(Long, Long)], k: Long): Long = rs match {
+          case (lo, hi) :: rest =>
+            if (k <= hi - lo + 1) lo + k - 1 else kth(rest, k - (hi - lo + 1))
+          case Nil => throw new IllegalArgumentException(s"rank $k past the backlog")
+        }
+        val backlog = ranges.toSeq.sortBy(_._1)
+          .map { case (p, rs) => p -> rs.map { case (lo, hi) => hi - lo + 1 }.sum }
+        Some(allot(backlog, maxMessages)((p, k) => kth(ranges(p), k)))
+      }
+    }
+  }
+
+  /** The bounded poll's plan from a sizing query over the pruned
+    * uncommitted tail: per partition, the backlog count and the
+    * `maxMessages` smallest offsets (window functions over one shuffle;
+    * ≤ P × `maxMessages` rows collected — no allocation reaches past
+    * that rank). Exact on any topic; [[poll]] runs it only when
+    * [[footerPlan]] cannot plan, e.g. across a [[compactByKey]] gap.
+    */
+  private[graft] def sizingPlan(spark: SparkSession, base: Map[Int, Long],
+                                maxMessages: Long): (Map[Int, Long], Long) = {
     val byPartition = org.apache.spark.sql.expressions.Window.partitionBy("partition")
-    val ranked = tail
+    val ranked = consume(spark, base)
       .withColumn("_rk", row_number().over(byPartition.orderBy("offset")))
       .withColumn("_n", count(lit(1)).over(byPartition))
       .filter(col("_rk") <= maxMessages)
       .select("partition", "offset", "_n")
       .collect()
-    val backlog = ranked.map(r => r.getInt(0) -> r.getLong(2)).distinct.sortBy(_._1)
+    val backlog = ranked.map(r => r.getInt(0) -> r.getLong(2)).distinct.sortBy(_._1).toSeq
+    val offsets = ranked.groupBy(_.getInt(0)).map { case (p, rows) =>
+      p -> rows.map(_.getLong(1)).sorted }
+    allot(backlog, maxMessages)((p, k) => offsets(p)(k.toInt - 1))
+  }
+
+  /** Cutoffs and count of a bounded poll, given each partition's
+    * backlog (ascending partition, each > 0) and its k-th smallest
+    * uncommitted offset: proportional floor allocation, leftover budget
+    * handed out one offset at a time in partition order to partitions
+    * with remaining backlog — deterministic, Σalloc = min(max, total).
+    * The cutoff per partition is its alloc(p)-th smallest uncommitted
+    * offset.
+    */
+  private def allot(backlog: Seq[(Int, Long)], maxMessages: Long)
+                   (kth: (Int, Long) => Long): (Map[Int, Long], Long) = {
     val total = backlog.map(_._2).sum
-    if (total == 0) 0L
-    else {
-      // proportional floor allocation, leftover budget handed out one
-      // offset at a time in partition order to partitions with
-      // remaining backlog — deterministic, Σalloc = min(max, total)
-      val want = math.min(maxMessages, total)
-      val alloc = scala.collection.mutable.LinkedHashMap(
-        backlog.map { case (p, n) =>
-          p -> math.min(n, (BigInt(want) * n / total).toLong) }: _*)
-      var left = want - alloc.values.sum
-      while (left > 0) {
-        for ((p, n) <- backlog if left > 0 && alloc(p) < n) {
-          alloc(p) += 1; left -= 1
-        }
+    val want = math.min(maxMessages, total)
+    val alloc = scala.collection.mutable.LinkedHashMap(
+      backlog.map { case (p, n) =>
+        p -> math.min(n, (BigInt(want) * n / total).toLong) }: _*)
+    var left = want - alloc.values.sum
+    while (left > 0) {
+      for ((p, n) <- backlog if left > 0 && alloc(p) < n) {
+        alloc(p) += 1; left -= 1
       }
-      // cutoff per partition = its alloc(p)-th smallest uncommitted offset
-      val offsets = ranked.groupBy(_.getInt(0)).map { case (p, rows) =>
-        p -> rows.map(_.getLong(1)).sorted }
-      val cutoffs = alloc.collect { case (p, k) if k > 0 =>
-        p -> offsets(p)(k.toInt - 1) }.toMap
-      val pred = cutoffs.foldLeft(lit(false)) {
-        case (acc, (p, cut)) =>
-          acc || (col("partition") === p && col("offset") <= lit(cut))
-      }
-      handler(tail.filter(pred))
-      commit(groupId, base ++ cutoffs)
-      want
     }
+    (alloc.collect { case (p, k) if k > 0 => p -> kth(p, k) }.toMap, want)
   }
 
   /** Compact the topic: rewrite each partition's accumulated small
@@ -1126,6 +1201,16 @@ final class EventLog(val dir: String, val numPartitions: Int = 8,
 }
 
 object EventLog {
+
+  /** One topic file's `offset` range as its footer records it: min,
+    * max and the number of non-null offsets. Offsets are unique within
+    * a partition ([[EventLog.produce]] numbers them), so the file holds
+    * every offset of its range exactly when it is `dense` — what
+    * `produce` and `compact` write; `compactByKey` leaves gaps.
+    */
+  private final case class FileOffsets(partition: Int, min: Long, max: Long, rows: Long) {
+    def dense: Boolean = rows == max - min + 1
+  }
 
   /** Multi-topic poll as one consumer group: the reference handler
     * receives `Map<topic, List<payload>>`

@@ -458,15 +458,20 @@ class EventLogSpec extends AnyFunSuite {
     val (n, pollJobs) = jobsOf(log.poll(spark, "g", maxMessages = 50)(_.collect()))
     assert(n == 50)
     // produce: the write, a shuffle stage plus its result (the
-    // high-water marks come from the footers); poll: the sizing query's
-    // shuffle stage and result, then the handler's one action
-    for ((op, jobs, bound) <- Seq(("produce", produceJobs, 2), ("poll", pollJobs, 3))) {
+    // high-water marks come from the footers); poll: the handler's one
+    // action (the cutoffs come from the footers too)
+    for ((op, jobs, bound) <- Seq(("produce", produceJobs, 2), ("poll", pollJobs, 1))) {
       assert(jobs.nonEmpty && jobs.size <= bound, s"$op started ${jobs.size} jobs (bound $bound)")
       // schema inference runs while the DataFrame is built, outside any
       // SQL execution; every job of a query carries its execution id
       assert(jobs.forall(_.getProperty("spark.sql.execution.id") != null),
         s"$op started a job outside any query (a parquet schema inference)")
     }
+    // with no backlog left, a bounded poll starts no job and skips its handler
+    assert(log.poll(spark, "g", maxMessages = 1000)(_ => ()) == 150)
+    val (none, emptyJobs) =
+      jobsOf(log.poll(spark, "g", maxMessages = 50)(_ => fail("empty poll ran handler")))
+    assert(none == 0 && emptyJobs.isEmpty, s"empty poll started ${emptyJobs.size} jobs")
   }
 
   /** Each partition's max offset as a Spark aggregate over the topic. */
@@ -517,6 +522,152 @@ class EventLogSpec extends AnyFunSuite {
     val (marks, jobs) = jobsOf(log.highWaterMarks(spark))
     assert(marks == want)
     assert(jobs.nonEmpty, "a statistics-less file must take the Spark fallback")
+  }
+
+  test("footer-planned bounded polls equal the sizing query; gaps, overlaps and missing statistics fall back") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-plan").toString
+    def batch(from: Int, until: Int, gen: Int = 0) = spark.range(from, until)
+      .select($"id".cast("string").as("key"), concat(lit(s"$gen:"), $"id").as("payload"))
+    // polling with a handler that runs no action: every job is the sizing query's
+    def fallbackJobs(log: EventLog, group: String, maxMessages: Long) =
+      jobsOf(log.poll(spark, group, maxMessages)(_ => ()))._2
+
+    val log = new EventLog(s"$root/dense", numPartitions = 4)
+    log.produce(batch(0, 60))
+    val first = log.highWaterMarks(spark)
+    log.produce(batch(60, 85))
+    log.produce(batch(85, 225))
+    val marks = log.highWaterMarks(spark)
+    assert(first.size == 4 && first.values.forall(_ >= 4), first)
+    // uneven positions: partition 0 committed in the middle of its first
+    // file, 1 at the end of its first file, 2 fully, 3 not at all
+    val bases = Seq(Map.empty[Int, Long],
+      Map(0 -> first(0) / 2, 1 -> first(1), 2 -> marks(2)))
+    def agree(): Unit = for (base <- bases) {
+      val backlog = marks.map { case (p, h) => h - base.getOrElse(p, -1L) }.sum
+      for (m <- Seq(1L, 7L, 33L, backlog, backlog + 9)) {
+        val sized = log.sizingPlan(spark, base, m)
+        assert(sized._2 == math.min(m, backlog))
+        assert(log.footerPlan(base, m) == Some(sized), s"base=$base maxMessages=$m")
+      }
+    }
+    agree()
+    // the planner path starts no job of its own
+    assert(fallbackJobs(log, "planned", 33).isEmpty)
+    // compaction rewrites each partition into one dense file
+    log.compact(spark)
+    agree()
+
+    // the same file copied in under a new name: partition 0's offsets
+    // overlap, so any poll that reads them falls back
+    val p0 = java.nio.file.Paths.get(log.dir, "partition=0")
+    val f0 = Files.list(p0).filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    Files.copy(f0, p0.resolve("copy-" + f0.getFileName))
+    assert(log.footerPlan(Map.empty, 10).isEmpty)
+    assert(fallbackJobs(log, "overlap", 10).nonEmpty, "overlapping files must take the sizing query")
+    // once partition 0 is committed past both copies, the footers plan again
+    val past0 = Map(0 -> marks(0))
+    assert(log.footerPlan(past0, 10) == Some(log.sizingPlan(spark, past0, 10)))
+
+    // a file without offset statistics
+    val nostats = new EventLog(s"$root/nostats", numPartitions = 4)
+    nostats.produce(batch(0, 100))
+    spark.range(1000, 1010)
+      .select(lit(0).as("partition"), $"id".as("offset"), $"id".cast("string").as("key"),
+        lit("#").as("payload"), current_timestamp().as("produced_at"))
+      .write.mode("append").option("parquet.column.statistics.enabled", "false")
+      .partitionBy("partition").parquet(nostats.dir)
+    assert(nostats.footerPlan(Map.empty, 10).isEmpty)
+    assert(fallbackJobs(nostats, "g", 10).nonEmpty, "a statistics-less file must take the sizing query")
+
+    // keyed compaction where one generation survives whole (the
+    // compacted-gap spec's layout): the gap lies below each partition's
+    // first survivor, the file is dense and the footers plan it
+    val leading = new EventLog(s"$root/leading", numPartitions = 4)
+    (0 until 3).foreach(g => leading.produce(batch(0, 100, g)))
+    leading.compactByKey(spark)
+    for (m <- Seq(1L, 30L, 100L, 130L))
+      assert(leading.footerPlan(Map.empty, m) == Some(leading.sizingPlan(spark, Map.empty, m)))
+    // updating every other key leaves gaps inside each compacted file:
+    // not dense, so the sizing query plans
+    val gaps = new EventLog(s"$root/gaps", numPartitions = 4)
+    gaps.produce(batch(0, 100))
+    gaps.produce(batch(0, 100, 1).filter(($"key".cast("int") % 2) === 0))
+    gaps.compactByKey(spark)
+    assert(gaps.footerPlan(Map.empty, 30).isEmpty)
+    assert(fallbackJobs(gaps, "g", 30).nonEmpty, "a compactByKey gap must take the sizing query")
+    var drained = 0L
+    var n = -1L
+    while (n != 0) { n = gaps.poll(spark, "g", maxMessages = 30)(_ => ()); drained += n }
+    assert(drained == 70 && gaps.lag(spark, "g").values.forall(_ == 0))
+  }
+
+  test("bounded polls racing a producer deliver each offset once, contiguous from 0, up to the commit") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-race").toString + "/event-stream"
+    val log = new EventLog(dir, numPartitions = 4)
+    def batch(from: Int, until: Int) = spark.range(from, until)
+      .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload"))
+    log.produce(batch(0, 40))
+    val produced = new java.util.concurrent.atomic.AtomicBoolean(false)
+    @volatile var producerError: Throwable = null
+    val producer = new Thread(() =>
+      try (1 until 8).foreach(i => log.produce(batch(i * 40, (i + 1) * 40)))
+      catch { case e: Throwable => producerError = e }
+      finally produced.set(true))
+    producer.start()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
+    val deadline = System.nanoTime() + 180L * 1000000000L
+    var drained = false
+    try while (!drained) {
+      assert(System.nanoTime() < deadline, "the group did not drain")
+      val last = produced.get()
+      val n = log.poll(spark, "g", maxMessages = 25) { b =>
+        seen ++= b.select("partition", "offset").as[(Int, Long)].collect()
+      }
+      drained = last && log.lag(spark, "g").values.forall(_ == 0)
+      if (n == 0 && !drained) Thread.sleep(5)
+    } finally producer.join()
+    assert(producerError == null, s"producer failed: $producerError")
+    val byPartition = seen.groupMap(_._1)(_._2).map { case (p, o) => p -> o.sorted }
+    for ((p, offsets) <- byPartition)
+      assert(offsets == (0L until offsets.size.toLong),
+        s"partition $p: missing ${(0L to offsets.last).diff(offsets).take(5)}, " +
+          s"repeated ${offsets.diff(offsets.distinct).take(5)}")
+    assert(seen.size == 320)
+    assert(log.committed("g") == byPartition.map { case (p, o) => p -> o.last })
+  }
+
+  test("lag across a rebalance is N_p - M_p per partition; the surviving member drains it to 0") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-rebalance-lag").toString + "/t"
+    val log = new EventLog(dir, numPartitions = 8)
+    def produce(from: Int, until: Int): Unit =
+      log.produce(spark.range(from, until)
+        .select($"id".cast("string").as("key"), concat(lit("#"), $"id").as("payload")))
+    val taken = scala.collection.mutable.Map[Int, Long]().withDefaultValue(0L)
+    def handler(b: org.apache.spark.sql.DataFrame): Unit =
+      b.groupBy("partition").count().as[(Int, Long)].collect()
+        .foreach { case (p, n) => taken(p) += n }
+    log.join("g", "c1"); log.join("g", "c2") // range: c1 owns 0-3, c2 owns 4-7
+    produce(0, 160)
+    log.pollAssigned(spark, "g", "c1")(handler)
+    produce(160, 240)
+    log.pollAssigned(spark, "g", "c2")(handler)
+    produce(240, 300)
+    log.leave("g", "c2")
+    val produced = log.consume(spark).groupBy("partition").count().as[(Int, Long)].collect().toMap
+    assert(produced.size == 8)
+    val lag = log.lag(spark, "g")
+    assert(lag == produced.map { case (p, n) => p -> (n - taken(p)) })
+    // each half kept the backlog produced after its owner's last poll
+    assert((0 until 4).forall(p => lag(p) > 0 && taken(p) > 0), lag)
+    assert((4 until 8).forall(p => lag(p) > 0 && taken(p) > 0), lag)
+    assert(log.assignment("g", "c1") == (0 until 8))
+    assert(log.pollAssigned(spark, "g", "c1")(handler) == lag.values.sum)
+    assert(log.lag(spark, "g").values.forall(_ == 0))
+    assert(taken == produced)
   }
 
   test("a topic dir holding only _temporary (first produce in flight) reads as empty") {
